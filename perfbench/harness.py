@@ -111,11 +111,6 @@ def start_spark(cores: int, trace_dir: str | None = None):
     return spark
 
 
-def stop_spark(spark) -> None:
-    """Stop the session; the JVM stays up for the next session."""
-    spark.stop()
-
-
 def shutdown_jvm() -> None:
     """End the JVM this process launched and every Python worker it
     forked, and wait until each has exited."""
@@ -210,6 +205,14 @@ def peak_rss_mb() -> float:
     return sum(_hwm_kb(pid) for pid in _descendants(os.getpid())) / 1024.0
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) jiffies of the machine so far, from /proc/stat:
+    steal is time the hypervisor gave this machine's CPUs to others."""
+    with open("/proc/stat") as f:
+        vals = [int(x) for x in f.readline().split()[1:]]
+    return vals[7], sum(vals[:8])
+
+
 def dir_bytes(path: str) -> int:
     total = 0
     for dp, _dirs, files in os.walk(path):
@@ -274,13 +277,14 @@ class Tracer:
                 }) + "\n")
 
 
-def wrap(owner, attr: str, tracer: Tracer, name: str) -> None:
+def wrap(owner, attr: str, tracer: Tracer, name: str, attrs=None) -> None:
     """Record a span around every call of ``owner.attr`` (a public
-    function or method of the package), from outside the package."""
+    function or method of the package), from outside the package.
+    ``attrs(*args, **kwargs)``, when given, returns the span's attributes."""
     fn = getattr(owner, attr)
 
     def wrapped(*a, **kw):
-        with tracer.span(name):
+        with tracer.span(name, **(attrs(*a, **kw) if attrs else {})):
             return fn(*a, **kw)
 
     wrapped.__wrapped__ = fn

@@ -5,7 +5,11 @@ page, one observation per url-hour at most, Zipf-ish domain skew) are
 staged as parquet. Each timed pass runs
 ``pages_to_obs_extracted -> repartition(hash(url)) -> 1h -> 1d -> 30d``
 and returns a fingerprint that consumes every partial column of every
-tier. No store writes and no Python run inside a pass.
+tier. No store writes and no Python run inside a pass. Each timed
+iteration also runs the scan alone, the obs derivation alone (scan +
+extraction), the tier cascade alone over cached obs and one routed range
+query over the tiers held in memory; every output is checked against
+DuckDB.
 """
 
 from __future__ import annotations
@@ -23,21 +27,20 @@ from harness import (
     jvm_gc_s,
     median,
     noop,
+    peak_rss_mb,
     query_ranges,
     rows_fp,
     run_query,
     spark_tier_fp,
     stage_pages,
     start_spark,
-    stop_spark,
 )
 
 NUM_URLS = 500
 OBS_PER_URL = 56
-QUERIES = 4
-MIN_PASSES = 4
-WARM_ITERATIONS = 2
-WARM_QUERIES = 1
+MIN_ITERATIONS = 5
+MAX_ITERATIONS = 40
+WARM_ITERATIONS = 1
 SPAN = 365 * 86400
 
 
@@ -86,12 +89,37 @@ def cascade_pass(spark, pages_path: str, cores: int) -> tuple:
     return _fingerprint(build_tiers_from(spark.read.parquet(pages_path), cores)[1])
 
 
-def scan_pass(spark, pages_path: str) -> None:
-    """Read every column of every staged page: the input-read floor."""
-    noop(spark.read.parquet(pages_path))
+def _epoch(c: str):
+    from pyspark.sql import functions as F
+
+    return F.unix_seconds(F.col(c).cast("timestamp"))
+
+
+def scan_pass(spark, pages_path: str) -> tuple:
+    """Read every column of every staged page (the input-read floor):
+    row count, bytes of each string column, first and last timestamp."""
+    from pyspark.sql import functions as F
+
+    return tuple(spark.read.parquet(pages_path).agg(
+        F.count(F.lit(1)),
+        *[F.sum(F.octet_length(c)) for c in ("url", "html", "text", "lang")],
+        F.min(_epoch("warc_ts")), F.max(_epoch("warc_ts")),
+    ).collect()[0])
 
 
 class Reference(PagesReference):
+    def __init__(self, pages_path: str) -> None:
+        super().__init__(pages_path)
+        self.scan = tuple(self.con.sql(
+            f"SELECT count(*), sum(strlen(url)), sum(octet_length(html)), sum(strlen(text)), "
+            f"sum(strlen(lang)), epoch(min(warc_ts))::BIGINT, epoch(max(warc_ts))::BIGINT "
+            f"FROM read_parquet('{self.glob}')").fetchone())
+
+    def derive_ok(self, got: tuple) -> bool:
+        """Rows, Σtext_length (Σvsum of every tier), url bytes, time range."""
+        n, url_bytes, _h, _t, _l, t_lo, t_hi = self.scan
+        return got == (n, self.tier["1h"][2], url_bytes, t_lo, t_hi)
+
     def pass_ok(self, fp: tuple) -> bool:
         """Cells, Σcnt and Σvsum of each tier, and the value range every
         tier must share. The xor term is compared across passes by the
@@ -119,12 +147,17 @@ def fold_pass(obs) -> tuple:
     return _fingerprint(build_tiers(obs, "text_length"))
 
 
-def derive_pass(spark, pages_path: str) -> None:
-    """obs derivation alone: scan + extraction, every obs column consumed."""
+def derive_pass(spark, pages_path: str) -> tuple:
+    """obs derivation alone: scan + extraction, every obs column consumed
+    by an aggregate that DuckDB can check."""
+    from pyspark.sql import functions as F
+
     from mintpy_spark.operators.observe import pages_to_obs_extracted
 
-    noop(pages_to_obs_extracted(spark.read.parquet(pages_path)).select(
-        "url", "warc_ts", "text_length"))
+    return tuple(pages_to_obs_extracted(spark.read.parquet(pages_path)).agg(
+        F.count(F.lit(1)), F.sum("text_length"), F.sum(F.octet_length("url")),
+        F.min(_epoch("warc_ts")), F.max(_epoch("warc_ts")),
+    ).collect()[0])
 
 
 def query_tiers(obs) -> dict:
@@ -135,78 +168,94 @@ def query_tiers(obs) -> dict:
     return {t: df.localCheckpoint(eager=True) for t, df in build_tiers(obs, "text_length").items()}
 
 
+class Inputs:
+    """What the timed operations read: the staged pages and, in the
+    untraced run, the cached obs, the materialized tiers and the query
+    ranges."""
+
+    def __init__(self, spark, pages_path: str, cores: int, seed: int, full: bool) -> None:
+        self.spark, self.pages_path, self.cores = spark, pages_path, cores
+        self.obs = cached_obs(spark, pages_path, cores) if full else None
+        self.tiers = query_tiers(self.obs) if full else None
+        self.ranges = query_ranges(seed, MAX_ITERATIONS, T0, SPAN)
+
+    def ops(self) -> dict:
+        """The timed operations of iteration k, by name; each returns the
+        output its check reads."""
+        spark, path = self.spark, self.pages_path
+        ops = {"pass": lambda k: cascade_pass(spark, path, self.cores)}
+        if self.obs is not None:
+            ops.update(
+                scan=lambda k: scan_pass(spark, path),
+                derive=lambda k: derive_pass(spark, path),
+                fold=lambda k: fold_pass(self.obs),
+                query=lambda k: run_query(self.obs, self.tiers, *self.ranges[k])[0],
+            )
+        return ops
+
+
 def _setup(ctx):
     t = time.perf_counter()
     spark = start_spark(ctx.cores)
     session_s = time.perf_counter() - t
     pages_path, stagings = stage(spark, ctx.seed, ctx.cores)
     t = time.perf_counter()
-    obs = cached_obs(spark, pages_path, ctx.cores)
-    for _ in range(WARM_ITERATIONS):  # JIT: passes keep speeding up until about here
-        first = cascade_pass(spark, pages_path, ctx.cores)
-        scan_pass(spark, pages_path)
-        derive_pass(spark, pages_path)
-        fold_pass(obs)
+    inputs = Inputs(spark, pages_path, ctx.cores, ctx.seed, full=True)
+    for k in range(WARM_ITERATIONS):  # the JIT's first, slowest repetitions
+        for fn in inputs.ops().values():
+            fn(k)
     warm_s = time.perf_counter() - t
     ctx.setup_s = session_s + median(stagings) + warm_s
     ctx.report["setup_parts_s"] = dict(session=session_s, staging=stagings, warm=warm_s)
-    return spark, pages_path, obs, first
+    return inputs
 
 
-def _timed(samples: list, fn):
-    t = time.perf_counter()
-    out = fn()
-    samples.append(time.perf_counter() - t)
-    return out
-
-
-def _measure(ctx, spark, pages_path: str, obs=None):
-    """Passes until ctx.seconds have passed and MIN_PASSES have run; each
-    iteration also times the scan, derive and fold ops when ``obs`` is
-    given."""
-    s = {"pass": [], "scan": [], "derive": [], "fold": []}
-    fps, folds = [], []
+def _measure(ctx, inputs: Inputs, first: int):
+    """Iterations ``first``, ``first`` + 1, ... until ctx.seconds have
+    passed and MIN_ITERATIONS have run. Returns the times and the outputs
+    of each op, by op name."""
+    ops = inputs.ops()
+    times = {k: [] for k in ops}
+    outs = {k: [] for k in ops}
     t_end = time.perf_counter() + ctx.seconds
-    while time.perf_counter() < t_end or len(s["pass"]) < MIN_PASSES:
-        with ctx.tracer.span("pass"):
-            fps.append(_timed(s["pass"], lambda: cascade_pass(spark, pages_path, ctx.cores)))
-        if obs is not None:
-            _timed(s["scan"], lambda: scan_pass(spark, pages_path))
-            _timed(s["derive"], lambda: derive_pass(spark, pages_path))
-            folds.append(_timed(s["fold"], lambda: fold_pass(obs)))
-    return s, fps, folds
+    k = first
+    while (time.perf_counter() < t_end or k - first < MIN_ITERATIONS) and k < MAX_ITERATIONS:
+        for name, fn in ops.items():
+            with ctx.tracer.span(name):
+                t = time.perf_counter()
+                outs[name].append(fn(k))
+                times[name].append(time.perf_counter() - t)
+        k += 1
+    return times, outs
 
 
 def run(ctx) -> None:
-    spark, pages_path, obs, first = _setup(ctx)
-    s, fps, folds = _measure(ctx, spark, pages_path, obs)
-    tiers = query_tiers(obs)
-    ranges = query_ranges(ctx.seed, WARM_QUERIES + QUERIES, T0, SPAN)
-    for lo, hi in ranges[:WARM_QUERIES]:
-        run_query(obs, tiers, lo, hi)
-    ranges = ranges[WARM_QUERIES:]
-    answers, qtimes = [], []
-    for lo, hi in ranges:
-        rows, dt = run_query(obs, tiers, lo, hi)
-        answers.append(rows)
-        qtimes.append(dt)
-    ctx.rss_mb = ctx.peak_rss()
+    t0 = time.perf_counter()
+    inputs = _setup(ctx)
+    t1 = time.perf_counter()
+    s, outs = _measure(ctx, inputs, WARM_ITERATIONS)
+    t2 = time.perf_counter()
+    ctx.rss_mb = peak_rss_mb()
 
-    # checks (untimed): DuckDB reference over the staged text column
-    ref = Reference(pages_path)
-    xor = {tuple(fp[5::6]) for fp in fps + folds + [first]}
-    tiers_ok = all(spark_tier_fp(df) == ref.tier[t] for t, df in tiers.items())
-    for fp in fps:
+    # checks (untimed): DuckDB over the staged parquet
+    ref = Reference(inputs.pages_path)
+    xor = {tuple(fp[5::6]) for fp in outs["pass"] + outs["fold"]}
+    tiers_ok = all(spark_tier_fp(df) == ref.tier[t] for t, df in inputs.tiers.items())
+    for fp in outs["pass"]:
         ctx.op(ref.pass_ok(fp) and len(xor) == 1 and tiers_ok, "cascade pass")
-    for fp in folds:
+    for fp in outs["fold"]:
         ctx.op(ref.pass_ok(fp) and len(xor) == 1, "fold over cached obs")
-    for _ in s["scan"] + s["derive"]:
-        ctx.op(True, "scan or derive pass")
-    for (lo, hi), rows in zip(ranges, answers):
+    for got in outs["scan"]:
+        ctx.op(got == ref.scan, "scan")
+    for got in outs["derive"]:
+        ctx.op(ref.derive_ok(got), "obs derivation")
+    for (lo, hi), rows in zip(inputs.ranges[WARM_ITERATIONS:], outs["query"]):
         ctx.op(rows_fp(rows) == duck_range(ref.con, ref.src, lo, hi), "range query")
     pages = ref.pages
     ref.close()
-    stop_spark(spark)
+    inputs.spark.stop()
+    ctx.report["phase_s"] = dict(setup=t1 - t0, iterations=t2 - t1,
+                                 checks=time.perf_counter() - t2)
 
     p50 = median(s["pass"])
     ctx.e2e(
@@ -215,11 +264,11 @@ def run(ctx) -> None:
         aux_p50_s=median(s["scan"]),
         fold_p50_s=median(s["fold"]),
         derive_p50_s=median(s["derive"]),
-        query_p50_s=median(qtimes),
+        query_p50_s=median(s["query"]),
     )
     ctx.report.update(
         pages=pages, pages_per_s=pages / p50, **{f"{k}_s": v for k, v in s.items()},
-        query_s=qtimes, query_count=len(qtimes),
+        query_count=len(s["query"]),
     )
 
 
@@ -267,7 +316,7 @@ def trace(ctx) -> None:
     for _ in range(2):
         cascade_pass(spark, pages_path, ctx.cores)  # warm
     gc0 = jvm_gc_s(spark)
-    _s, fps, _folds = _measure(ctx, spark, pages_path)
+    fps = _measure(ctx, Inputs(spark, pages_path, ctx.cores, ctx.seed, full=False), 0)[1]["pass"]
     gc_s = (jvm_gc_s(spark) - gc0) / len(fps)
     prefixes = _prefixes(spark, pages_path, ctx.cores)
     for _rep in range(2):
@@ -277,14 +326,14 @@ def trace(ctx) -> None:
     null_rows = pages_to_obs_extracted(spark.read.parquet(pages_path)).where(
         F.col("text_length").isNull()
     ).count()
-    stop_spark(spark)
+    spark.stop()
 
     spark = start_spark(ctx.cores)
     plain = _timed_passes(spark, pages_path, ctx.cores, 3)
-    stop_spark(spark)
+    spark.stop()
     spark = start_spark(1)
     one = _timed_passes(spark, pages_path, 1, 2)
-    stop_spark(spark)
+    spark.stop()
 
     ref = Reference(pages_path)
     for fp in fps:
@@ -294,11 +343,10 @@ def trace(ctx) -> None:
     per_pass = [ev.metrics(sp.start, sp.end) for sp in pass_spans]
     m = per_pass[len(per_pass) // 2]
     pre = {k: median(tr.durations(f"prefix.{k}")) for k in prefixes}
-    scan_m = ev.metrics(*_first(tr, "prefix.scan"))
     traced = median([sp.dur for sp in pass_spans])
     layer = ctx.layer
     layer["sources.scan_s"] = pre["scan"]
-    layer["sources.scan_bytes"] = scan_m.input_bytes
+    layer["sources.scan_bytes"] = m.sql_sum("size of files read", "Scan")
     layer["extract.self_s"] = pre["extract"] - pre["scan"]
     layer["extract.bytes_in"] = ref.html_bytes
     layer["extract.null_rows"] = null_rows
@@ -324,7 +372,3 @@ def trace(ctx) -> None:
     )
     ref.close()
 
-
-def _first(tr, name: str) -> tuple[float, float]:
-    s = next(s for s in tr.spans if s.name == name)
-    return s.start, s.end

@@ -32,22 +32,21 @@ from harness import (
     jvm_gc_s,
     median,
     noop,
+    peak_rss_mb,
     percentile,
     stage_pages,
     start_spark,
-    stop_spark,
     unwrap,
     wrap,
 )
 
-NUM_URLS = 40
+NUM_URLS = 30
 OBS_PER_URL = 30
 BUCKETS = 4
 LOST_STAGE = "tier_1d"
 LOST_PARTS = (1, 3)
 STAGES = ("obs", "tier_1h", "tier_1d", "tier_30d", "blocks", "velocity")
-MIN_CYCLES = 1
-RESUMES = 2
+MIN_CYCLES = 3
 
 
 def drop_partitions(root: str) -> None:
@@ -119,9 +118,9 @@ def _untouched(root: str) -> dict[str, str]:
     return {st: file_fp(os.path.join(root, st)) for st in STAGES if st != LOST_STAGE}
 
 
-def cycle(ctx, spark, pages, ref, i: int) -> tuple[float, list[float], str]:
-    """One cold run into a fresh store, then RESUMES crash-and-resume
-    rounds on it; every run checked."""
+def cycle(ctx, spark, pages, ref, i: int) -> tuple[float, float, str]:
+    """One cold run into a fresh store, then one crash-and-resume round
+    on it; both runs checked."""
     from mintpy_spark.plans.pipeline import run_pipeline
 
     root = os.path.join(WORK, f"store_{i}")
@@ -132,37 +131,33 @@ def cycle(ctx, spark, pages, ref, i: int) -> tuple[float, list[float], str]:
         cold = time.perf_counter() - t
     ctx.op(ref.tiers_ok(root) and ref.checkpoint_ok(root) and ref.sha_ok(root), "cold pipeline")
     before = _untouched(root)
-    resumes = []
-    for _ in range(RESUMES):
-        drop_partitions(root)
-        with tr.span("resume", i=i):
-            t = time.perf_counter()
-            run_pipeline(spark, pages, root, buckets=BUCKETS)
-            resumes.append(time.perf_counter() - t)
-        ctx.op(
-            ref.tiers_ok(root) and ref.checkpoint_ok(root) and _untouched(root) == before,
-            "resumed pipeline",
-        )
-    return cold, resumes, root
+    drop_partitions(root)
+    with tr.span("resume", i=i):
+        t = time.perf_counter()
+        run_pipeline(spark, pages, root, buckets=BUCKETS)
+        resume = time.perf_counter() - t
+    ctx.op(
+        ref.tiers_ok(root) and ref.checkpoint_ok(root) and _untouched(root) == before,
+        "resumed pipeline",
+    )
+    return cold, resume, root
 
 
 def _setup(ctx, trace_dir: str | None = None):
-    """Session, staged pages and batch files, and the warm batches of the
-    incremental phase (``incremental.start``). The pipeline gets no warm
-    run of its own: the incremental phase runs first and warms the JVM
-    and the Python workers, so the cold run pays only what is particular
-    to it."""
-    tr = ctx.tracer
-    traced, tr.enabled = tr.enabled, False
+    """Session, staged pages and input files, and the untimed batches of
+    the incremental phase (``incremental.start``). The pipeline gets no
+    warm run of its own: the incremental phase runs first and warms the
+    JVM and the Python workers, and the median of MIN_CYCLES cold runs
+    absorbs the first one's remaining warm-up."""
     t = time.perf_counter()
     spark = start_spark(ctx.cores, trace_dir=trace_dir)
     session_s = time.perf_counter() - t
     pages_path, stagings = stage_pages(spark, ctx.seed, NUM_URLS, OBS_PER_URL, ctx.cores)
-    batches, batch_stagings = incremental.stage(ctx.seed)
+    batches, backfill, batch_stagings = incremental.stage(ctx.seed)
     t = time.perf_counter()
-    loop = incremental.start(spark, batches, "incremental", tr)
+    loop = incremental.start(spark, batches, backfill, "incremental", ctx.tracer,
+                             growth=trace_dir is not None)
     warm_s = time.perf_counter() - t
-    tr.enabled = traced
     ctx.setup_s = session_s + median(stagings) + median(batch_stagings) + warm_s
     ctx.report["setup_parts_s"] = dict(
         session=session_s, staging=stagings, batch_staging=batch_stagings, warm=warm_s,
@@ -177,21 +172,27 @@ def _cycles(ctx, spark, pages_path: str, ref):
     while time.perf_counter() < t_end or len(colds) < MIN_CYCLES:
         c, r, root = cycle(ctx, spark, pages, ref, len(colds))
         colds.append(c)
-        resumes.extend(r)
+        resumes.append(r)
         roots.append(root)
     return colds, resumes, roots
 
 
 def run(ctx) -> None:
+    t0 = time.perf_counter()
     spark, pages_path, loop = _setup(ctx)
     ref = Reference(pages_path)
     iref = incremental.Reference()
+    t1 = time.perf_counter()
     folds, streams, qtimes, _deltas = incremental.measure(
         ctx, spark, loop, iref, ctx.seconds / 2)
+    t2 = time.perf_counter()
     colds, resumes, _roots = _cycles(ctx, spark, pages_path, ref)
-    ctx.rss_mb = ctx.peak_rss()
+    t3 = time.perf_counter()
+    ctx.rss_mb = peak_rss_mb()
     checks = incremental.check(ctx, spark, loop, iref, len(folds), len(streams))
-    stop_spark(spark)
+    spark.stop()
+    ctx.report["phase_s"] = dict(setup=t1 - t0, incremental=t2 - t1, pipeline=t3 - t2,
+                                 final_checks=time.perf_counter() - t3)
     pages = ref.pages
     ref.close()
     iref.con.close()
@@ -213,20 +214,6 @@ def run(ctx) -> None:
     )
 
 
-def _stage_wrapper(tracer):
-    """Span around every run_stage call, named by its stage."""
-    import mintpy_spark.plans.pipeline as pl
-
-    fn = pl.run_stage
-
-    def wrapped(spark, store, ckpt, run_id, stage, *a, **kw):
-        with tracer.span("stage", stage=stage):
-            return fn(spark, store, ckpt, run_id, stage, *a, **kw)
-
-    wrapped.__wrapped__ = fn
-    pl.run_stage = wrapped
-
-
 def trace(ctx) -> None:
     """Traced batches and cycle (event log + spans around run_stage,
     TableStore.write_partitions, the checkpoint calls and
@@ -241,15 +228,16 @@ def trace(ctx) -> None:
 
     tr = ctx.tracer
     log_dir = os.path.join(WORK, "eventlog", "traced")
-    spark, pages_path, loop = _setup(ctx, trace_dir=log_dir)
-    ref = Reference(pages_path)
-    iref = incremental.Reference()
-    _stage_wrapper(tr)
+    wrap(pl, "run_stage", tr, "stage", attrs=lambda *a, **_kw: {"stage": a[4]})
     wrap(TableStore, "write_partitions", tr, "write_partitions")
     wrap(CheckpointTable, "complete_parts", tr, "checkpoint.complete_parts")
     wrap(CheckpointTable, "append", tr, "checkpoint.append")
     wrap(TierMaintainer, "apply_delta", tr, "apply_delta")
     try:
+        spark, pages_path, loop = _setup(ctx, trace_dir=log_dir)
+        ref = Reference(pages_path)
+        iref = incremental.Reference()
+        t_measure = time.time()
         qtimer: list = []
         folds, streams, _qt, deltas = incremental.measure(
             ctx, spark, loop, iref, ctx.seconds / 2, qtimer)
@@ -274,13 +262,14 @@ def trace(ctx) -> None:
         unwrap(CheckpointTable, "complete_parts")
         unwrap(CheckpointTable, "append")
         unwrap(TierMaintainer, "apply_delta")
-    stop_spark(spark)
+    spark.stop()
 
-    # untraced baseline in the same (warm) JVM
+    # untraced baseline in the same (warm) JVM: one cycle, compared with
+    # the first traced cycle, both a session's first cold run
     tr.enabled = False
     spark = start_spark(ctx.cores)
-    plain = [cycle(ctx, spark, spark.read.parquet(pages_path), ref, 99)[0]]
-    stop_spark(spark)
+    plain = cycle(ctx, spark, spark.read.parquet(pages_path), ref, len(roots))[0]
+    spark.stop()
     tr.enabled = True
 
     ev = EventLog(log_dir)
@@ -351,9 +340,10 @@ def trace(ctx) -> None:
     layer["pipeline.parts_lost"] = len(LOST_PARTS)
     layer["pipeline.parts_recomputed"] = recomputed
     layer["pipeline.recompute_ratio"] = recomputed / len(LOST_PARTS)
-    incremental.fill_layers(ctx, ev, loop, streams, deltas, checks, store_bytes, qtimer)
+    incremental.fill_layers(ctx, ev, loop, t_measure, streams, deltas, checks, store_bytes,
+                            qtimer)
     iref.con.close()
-    layer["trace.overhead_s"] = median(colds) - median(plain)
+    layer["trace.overhead_s"] = colds[0] - plain
     # the resume rounds redo identical work (the same lost partitions)
     ctx.repeat_check([ev.metrics(s.start, s.end) for s in spans if s.name == "resume"])
     ctx.report.update(

@@ -27,82 +27,11 @@ import harness  # noqa: E402
 
 WORKLOADS = ("ingest_cascade", "stored_pipeline")
 
-END_TO_END = {
-    "setup_s": "s",
-    "rows_per_s": "rows/s",
-    "main_p50_s": "s",
-    "aux_p50_s": "s",
-    "fold_p50_s": "s",
-    "derive_p50_s": "s",
-    "query_p50_s": "s",
-    "peak_rss_mb": "MB",
-}
 
-PER_LAYER = {
-    "sources.scan_s": "s",
-    "sources.scan_bytes": "bytes",
-    "sources.write_s": "s",
-    "sources.bytes_written": "bytes",
-    "sources.read_back_s": "s",
-    "extract.self_s": "s",
-    "extract.bytes_in": "bytes",
-    "extract.null_rows": "count",
-    "exchange.self_s": "s",
-    "exchange.count": "count",
-    "exchange.shuffle_bytes": "bytes",
-    "exchange.fetch_wait_s": "s",
-    "exchange.spill_bytes": "bytes",
-    "rollup.self_s": "s",
-    "rollup.rows_1h": "count",
-    "rollup.rows_1d": "count",
-    "rollup.rows_30d": "count",
-    "rollup.obs_per_1h_row": "ratio",
-    "blocks.self_s": "s",
-    "blocks.groups": "count",
-    "blocks.bytes_per_value": "bytes",
-    "seam.python_total_s": "s",
-    "seam.python_boot_s": "s",
-    "seam.python_data_sent_bytes": "bytes",
-    "seam.rows_to_python": "count",
-    "velocity.self_s": "s",
-    "pipeline.stage_s.obs": "s",
-    "pipeline.stage_s.tier_1h": "s",
-    "pipeline.stage_s.tier_1d": "s",
-    "pipeline.stage_s.tier_30d": "s",
-    "pipeline.stage_s.blocks": "s",
-    "pipeline.stage_s.velocity": "s",
-    "pipeline.overhead_s": "s",
-    "pipeline.blocks_share": "ratio",
-    "pipeline.parts_lost": "count",
-    "pipeline.parts_recomputed": "count",
-    "pipeline.recompute_ratio": "ratio",
-    "checkpoint.read_s": "s",
-    "fold.apply_delta_s": "s",
-    "fold.apply_delta_first_s": "s",
-    "fold.apply_delta_last_s": "s",
-    "fold.bytes_written": "bytes",
-    "fold.write_amp": "ratio",
-    "fold.store_bytes": "bytes",
-    "stream.batch_s": "s",
-    "stream.rows_in": "count",
-    "stream.rows_out": "count",
-    "stream.rows_dropped": "count",
-    "stream.state_bytes": "bytes",
-    "stream.python_total_s": "s",
-    "stream.rows_to_python": "count",
-    "query.plan_s": "s",
-    "query.exec_s": "s",
-    "query.cover_pieces": "count",
-    "query.tier_rows_read": "count",
-    "query.raw_rows_read": "count",
-    "jvm.gc_s": "s",
-    "ingest.pass_s": "s",
-    "ingest.extract_share": "ratio",
-    "ingest.scaling_eff": "ratio",
-    "trace.overhead_s": "s",
-    "trace.counts_checked": "count",
-    "trace.counts_repeat_exact": "count",
-}
+def declared_metrics(section: str) -> dict[str, str]:
+    """Metric name -> unit, as BENCHMARK.json declares them."""
+    with open(os.path.join(harness.ROOT, "BENCHMARK.json")) as f:
+        return {m["name"]: m["unit"] for m in json.load(f)[section]}
 
 
 class Ctx:
@@ -120,7 +49,7 @@ class Ctx:
         self.setup_s = 0.0
         self.rss_mb = 0.0
         self.metrics: dict[str, float] = {}
-        self.layer: dict[str, float] = {k: 0.0 for k in PER_LAYER}
+        self.layer: dict[str, float] = {k: 0.0 for k in declared_metrics("per_layer")}
         self.report: dict = {"cores": self.cores}
 
     def op(self, ok: bool, what: str) -> None:
@@ -134,10 +63,6 @@ class Ctx:
         self.metrics.update(metrics)
         self.metrics["setup_s"] = self.setup_s
         self.metrics["peak_rss_mb"] = self.rss_mb
-
-    @staticmethod
-    def peak_rss() -> float:
-        return harness.peak_rss_mb()
 
     def repeat_check(self, per_op: list) -> None:
         """Which deterministic work counters repeat exactly across the
@@ -178,6 +103,7 @@ def main(argv: list[str] | None = None) -> int:
     sys.path.insert(0, harness.ROOT)
     ctx = Ctx(args)
     mod = _module(args.workload)
+    steal0, total0 = harness.cpu_ticks()
     try:
         (mod.trace if args.trace else mod.run)(ctx)
     finally:
@@ -187,9 +113,13 @@ def main(argv: list[str] | None = None) -> int:
         spans = os.path.join(harness.OUT, f"spans-{args.workload}-{args.seed}.jsonl")
         ctx.tracer.write(spans)
         ctx.report["spans"] = os.path.relpath(spans, harness.ROOT)
-        metrics = {k: {"value": float(ctx.layer[k]), "unit": u} for k, u in PER_LAYER.items()}
+        values, section = ctx.layer, "per_layer"
     else:
-        metrics = {k: {"value": float(ctx.metrics[k]), "unit": u} for k, u in END_TO_END.items()}
+        values, section = ctx.metrics, "end_to_end"
+    metrics = {k: {"value": float(values[k]), "unit": u}
+               for k, u in declared_metrics(section).items()}
+    steal1, total1 = harness.cpu_ticks()
+    ctx.report["cpu_steal_share"] = (steal1 - steal0) / max(total1 - total0, 1)
     ctx.report["failed_ops_ratio"] = ctx.failed / max(ctx.attempted, 1)
     ctx.report["failures"] = ctx.failures
     print("report: " + json.dumps(ctx.report, default=float))

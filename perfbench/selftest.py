@@ -4,7 +4,8 @@
 
 1. An injected wrong tier row is counted as a failed operation, for the
    ingest pass fingerprint, the stored-tier fingerprint and a range-query
-   answer; the untouched outputs pass.
+   answer, and so is a wrong scan or obs-derivation aggregate; the
+   untouched outputs pass.
 2. The same seed gives an identical input fingerprint and a different
    seed a different one, for the pages generator and the incremental
    batch generator.
@@ -49,6 +50,10 @@ def test_injected_wrong_row(spark, results: dict) -> None:
     # clean outputs pass
     ctx.op(ref.pass_ok(ingest.cascade_pass(spark, pages_path, 2)), "clean pass")
     ctx.op(harness.spark_tier_fp(tiers["1d"]) == ref.tier["1d"], "clean tier")
+    scan = ingest.scan_pass(spark, pages_path)
+    derived = ingest.derive_pass(spark, pages_path)
+    ctx.op(scan == ref.scan, "clean scan")
+    ctx.op(ref.derive_ok(derived), "clean derive")
     clean_failed = ctx.failed
 
     # one wrong row: a single 1d cell's count is off by one
@@ -63,6 +68,8 @@ def test_injected_wrong_row(spark, results: dict) -> None:
     bad = list(good)
     bad[7] += 1  # Σcnt of the 1d tier
     ctx.op(ref.pass_ok(tuple(bad)), "wrong pass")
+    ctx.op(scan[:2] + (scan[2] - 1,) + scan[3:] == ref.scan, "wrong scan")  # html bytes
+    ctx.op(ref.derive_ok(derived[:1] + (derived[1] + 1,) + derived[2:]), "wrong derive")
 
     lo, hi = harness.query_ranges(5, 1, ingest.T0, ingest.SPAN)[0]
     obs = pages_to_obs_extracted(spark.read.parquet(pages_path))
@@ -76,7 +83,8 @@ def test_injected_wrong_row(spark, results: dict) -> None:
     ref.close()
     results["clean outputs pass"] = clean_failed == 0 and "clean query" not in ctx.failures
     results["injected wrong row counted as failure"] = (
-        ctx.failures == {"wrong tier": 1, "wrong pass": 1, "wrong query": 1}
+        ctx.failures == {"wrong tier": 1, "wrong pass": 1, "wrong scan": 1,
+                         "wrong derive": 1, "wrong query": 1}
     )
 
 
@@ -101,8 +109,9 @@ def test_seed_fingerprints(spark, results: dict) -> None:
     con = duckdb.connect()
     bfps = []
     for i, seed in enumerate((7, 7, 8)):
-        paths = incremental.gen_batches(seed, os.path.join(harness.WORK, f"st_batches_{i}"))
-        files = ", ".join(f"'{p}'" for p in paths)
+        paths, backfill = incremental.gen_batches(
+            seed, os.path.join(harness.WORK, f"st_batches_{i}"))
+        files = ", ".join(f"'{p}'" for p in paths + [backfill])
         bfps.append(con.sql(
             f"SELECT count(*), sum(('0x' || substr(md5(url || '|' || epoch_us(warc_ts) || '|' "
             f"|| text_length), 1, 8))::BIGINT) FROM read_parquet([{files}])").fetchone())
@@ -137,7 +146,7 @@ def main() -> int:
         test_injected_wrong_row(spark, results)
         test_seed_fingerprints(spark, results)
     finally:
-        harness.stop_spark(spark)
+        spark.stop()
         harness.shutdown_jvm()
         harness.cleanup_work()
     for name, ok in results.items():
