@@ -13,10 +13,17 @@ The storage analog of the reference's chunked HDF5 layout (stack.py:352-355
   text, which contributes no bytes), so text — including NULLs —
   round-trips **byte-identically** (the input_hint invariant)
 
-Packing/unpacking run inside applyInPandas / mapInPandas — Arrow batches,
-numpy inside, no per-row Python. At 100 TB the block table is the cold
-tier: ~100-1000x fewer rows than raw obs, partitioned by hash(key), and
-range queries prune on (key, window_start) before any decode happens.
+Packing runs on the sorted-group seam (operators/seqstate.py::
+map_sorted_groups): one shuffle on (key, window), a partition-local sort
+on (key, window, ts, value[, text]), then one mapInPandas call per Arrow
+chunk that cuts the chunk at its (key, window) boundaries with numpy and
+encodes each block from array slices — no pandas frame per block, no
+per-row Python beyond the text list. The full sort key makes the blob
+bytes a function of the rows alone, whatever their input order or
+partitioning. Unpacking is a plain mapInPandas. At 100 TB the block table
+is the cold tier: ~100-1000x fewer rows than raw obs, partitioned by
+hash(key), and range queries prune on (key, window_start) before any
+decode happens.
 """
 
 from __future__ import annotations
@@ -37,6 +44,7 @@ from mintpy_spark.codecs.gorilla import (
     encode_timestamps,
 )
 from mintpy_spark.functions.timefn import bucket_start
+from mintpy_spark.operators.seqstate import map_sorted_groups
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -60,18 +68,26 @@ def pack_blocks(
     ts: str = "warc_ts",
     value_dtype: str = "float32",
 ) -> DataFrame:
-    """Series -> one compressed row per (key, window)."""
+    """Series -> one compressed row per (key, window). A NULL key or
+    timestamp raises ValueError (the block schema has no NULL key)."""
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_ts_us", kind="mergesort")
+        # rows arrive sorted by (key, window, ts, value[, text]); a block
+        # is a run of equal (key, window)
+        keys = pdf[key].to_numpy()
+        wins = pdf["_win"].to_numpy()
+        cut = np.flatnonzero((keys[1:] != keys[:-1]) | (wins[1:] != wins[:-1])) + 1
+        starts = np.concatenate(([0], cut))
+        ends = np.append(cut, len(pdf))
+        spans = list(zip(starts, ends))
         ts_us = pdf["_ts_us"].to_numpy(dtype=np.int64)
         vals = pdf[value_col].to_numpy(dtype=value_dtype)
-        row = {
-            "key": [pdf[key].iloc[0]],
-            "window_start": [pdf["_win"].iloc[0]],
-            "n": [len(pdf)],
-            "ts_blob": [encode_timestamps(ts_us)],
-            "val_blob": [encode_floats(vals)],
+        out = {
+            "key": keys[starts],
+            "window_start": wins[starts],
+            "n": (ends - starts).astype(np.int32),
+            "ts_blob": [encode_timestamps(ts_us[a:b]) for a, b in spans],
+            "val_blob": [encode_floats(vals[a:b]) for a, b in spans],
         }
         if text_col is not None:
             # bytes, never str dtype: byte-identity (SURVEY.md §7.3 #4).
@@ -86,15 +102,17 @@ def pack_blocks(
             lens = np.array(
                 [-1 if t is None else len(t) for t in texts], dtype=np.int64
             )
-            row["txt_blob"] = [
-                zlib.compress(b"".join(t for t in texts if t is not None), 6)
+            out["txt_blob"] = [
+                zlib.compress(b"".join(t for t in texts[a:b] if t is not None), 6)
+                for a, b in spans
             ]
-            row["txt_lens"] = [lens.tobytes()]
+            out["txt_lens"] = [lens[a:b].tobytes() for a, b in spans]
         else:
-            row["txt_blob"] = [None]
-            row["txt_lens"] = [None]
-        return pd.DataFrame(row)
+            out["txt_blob"] = [None] * len(spans)
+            out["txt_lens"] = [None] * len(spans)
+        return pd.DataFrame(out)
 
+    payload = [value_col] if text_col is None else [value_col, text_col]
     prepped = obs.select(
         F.col(key).alias(key),
         # unix_micros, NOT cast-double*1e6: the double path truncates one
@@ -102,9 +120,11 @@ def pack_blocks(
         # scale is ~0.24us) — lossless restore requires the exact integer
         F.unix_micros(F.col(ts).cast("timestamp")).alias("_ts_us"),
         bucket_start(F.col(ts), window).alias("_win"),
-        *( [F.col(value_col)] if text_col is None else [F.col(value_col), F.col(text_col)] ),
+        *payload,
     )
-    return prepped.groupBy(key, "_win").applyInPandas(pack, BLOCK_SCHEMA)
+    return map_sorted_groups(
+        prepped, (key, "_win"), ("_ts_us", *payload), pack, BLOCK_SCHEMA
+    )
 
 
 def unpack_blocks(blocks: DataFrame, with_text: bool = False) -> DataFrame:

@@ -60,41 +60,6 @@ def extract_text_bytes(html: bytes) -> bytes | None:
     return html[i + len(BODY_OPEN): j]
 
 
-def extract_text_expr(html_col: str = "html"):
-    """Catalyst column expression recovering the body bytes as a UTF-8
-    string (NULL when malformed).
-
-    ISO-8859-1 is byte-preserving (all 256 bytes map 1:1 to chars), so
-    string ops on the decoded proxy index *bytes*; the slice re-encodes to
-    the original bytes exactly, then decodes as UTF-8 (malformed sequences
-    -> U+FFFD, same as the Arrow path's errors='replace').
-
-    Strategy: ONE charset conversion (UTF-8 decode with replacement — the
-    markers are ASCII, and a malformed byte sequence can never swallow a
-    following ASCII byte, so marker positions survive decoding), then pure
-    length arithmetic on ``substring_index`` prefixes/suffixes:
-
-        pre  = text before the FIRST <body>   (whole string if absent)
-        tail = text after  the LAST  </body>  (whole string if absent)
-        body = substring(s, len(pre)+7, len(s)-len(pre)-len(tail)-13)
-
-    Invalid UTF-8 *inside* the body becomes U+FFFD — identical to the
-    Arrow path's errors='replace'. An earlier variant round-tripped through
-    ISO-8859-1 (byte-exact view) with reverse+locate; the single-decode
-    form is ~8x faster (charset conversions and reverse dominated).
-    """
-    s = F.decode(F.col(html_col), "UTF-8")
-    pre = F.substring_index(s, "<body>", 1)
-    tail = F.substring_index(s, "</body>", -1)
-    ls, lp, lt = F.length(s), F.length(pre), F.length(tail)
-    has_open = lp < ls
-    has_close = lt < ls
-    body_len = ls - lp - lt - F.lit(len(BODY_OPEN) + len(BODY_CLOSE))
-    body = F.substring(s, lp + F.lit(len(BODY_OPEN) + 1), F.greatest(body_len, F.lit(0)))
-    ok = has_open & has_close & (body_len >= 0)
-    return F.when(ok, body).otherwise(F.lit(None))
-
-
 def extract_text(
     pages: DataFrame,
     html_col: str = "html",

@@ -14,7 +14,9 @@ Execution contract per stage:
 * run_stage() consults the checkpoint table: partitions already complete
   for this (stage, input_fp) are **not recomputed** — the input is filtered
   to the missing buckets only, written partition-atomically, and each
-  written partition's row count is committed to the checkpoint,
+  written partition's row count is committed to the checkpoint. The counts
+  come from the write itself (an ``Observation`` on the written DataFrame),
+  not from a second scan of the output,
 * a run killed mid-stage therefore resumes exactly where it stopped
   (partition rename is atomic; un-renamed partitions are recomputed),
   mirroring the reference's partial-write detection
@@ -30,7 +32,7 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from mintpy_spark.plans.checkpoint import CheckpointTable
@@ -48,7 +50,11 @@ def run_stage(
     buckets: int = 32,
 ) -> DataFrame:
     """Execute one stage with per-partition skip/resume; returns the full
-    stage output (reading back what exists on disk)."""
+    stage output (reading back what exists on disk).
+
+    Each written partition's checkpoint ``row_count`` is observed on the
+    DataFrame as it is written — one ``count_if(part_id = p)`` per missing
+    bucket — so the write is the only pass over the stage's output."""
     done = ckpt.complete_parts(stage, input_fp)
     missing = sorted(set(range(buckets)) - done)
     if missing:
@@ -58,16 +64,14 @@ def run_stage(
             raise ValueError(f"stage {stage}: build() must attach part_id")
         if done:
             df = df.where(F.col("part_id").isin(missing))
+        rows = Observation()
+        df = df.observe(
+            rows,
+            *[F.count_if(F.col("part_id") == p).alias(str(p)) for p in missing],
+        )
         written = store.write_partitions(df, stage)
         wall = int((time.time() - t0) * 1000)
-        counts = {
-            r["part_id"]: r["cnt"]
-            for r in store.read(spark, stage)
-            .where(F.col("part_id").isin(written))
-            .groupBy("part_id")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
+        counts = rows.get
         ckpt.append(
             [
                 {
@@ -75,7 +79,7 @@ def run_stage(
                     "stage": stage,
                     "part_id": int(p),
                     "input_fp": input_fp,
-                    "row_count": int(counts.get(p, 0)),
+                    "row_count": int(counts[str(p)]),
                     "wall_ms": wall,
                     "status": "complete",
                 }

@@ -482,8 +482,8 @@ def codec_dod_size_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode(encode(x)) is BIT-exact inside the engine; the oracle pins
     them TRUE, so a roundtrip regression also flips the hash.
 
-    Scale: ONE shuffle (groupBy key -> applyInPandas, the same
-    Arrow-batched seam as the production pack_blocks writer); the audit
+    Scale: ONE shuffle (map_sorted_groups on the key, the same
+    sorted-group seam as the production pack_blocks writer); the audit
     is how a 100 TB deployment spot-checks cold-tier compression ratio
     per partition without reading blobs back."""
     from mintpy_spark.codecs.gorilla import (
@@ -757,8 +757,8 @@ def codec_gorilla_size_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     HDF5; the north rule moves the codec into the engine, so this audit
     is the engine-owned replacement for h5py's storage-size checks.
 
-    Scale: ONE shuffle (groupBy key -> applyInPandas, the same
-    Arrow-batched seam as the production pack_blocks writer). This is how
+    Scale: ONE shuffle (map_sorted_groups on the key, the same
+    sorted-group seam as the production pack_blocks writer). This is how
     a 100 TB deployment spot-checks cold-tier value-stream compression
     ratio per partition without reading blobs back.
     """

@@ -178,3 +178,115 @@ def test_block_timestamps_roundtrip_exact_microseconds(spark):
     blocks = pack_blocks(spark.createDataFrame(pdf), "v", value_dtype="float64")
     back = unpack_blocks(blocks).orderBy("warc_ts").collect()
     assert [r.warc_ts for r in back] == sorted(ts)
+
+
+def _blocks_by_key(blocks):
+    rows = blocks.collect()
+    out = {
+        (r.key, r.window_start): tuple(
+            None if b is None else bytes(b)
+            for b in (r.ts_blob, r.val_blob, r.txt_blob, r.txt_lens)
+        ) + (r.n,)
+        for r in rows
+    }
+    assert len(out) == len(rows)  # one block per (key, window)
+    return out
+
+
+def test_pack_blocks_carry_path_matches_direct_encoding(spark):
+    """With 7-row Arrow batches most (key, window) groups span batches,
+    so the seam's carry buffer assembles them; every block must still
+    equal the codecs applied to that group's rows in (ts, value) order."""
+    import datetime as dt
+    import zlib
+
+    from pyspark.sql import functions as F
+
+    from mintpy_spark.codecs.blocks import pack_blocks
+    from mintpy_spark.functions.timefn import bucket_start
+
+    rng = np.random.default_rng(3)
+    t0 = dt.datetime(2024, 1, 1)
+    rows = []
+    for k in range(6):
+        n = int(rng.integers(1, 60))
+        hours = np.sort(rng.choice(24 * 120, size=n, replace=False))
+        for h in hours:
+            v = float(rng.normal(100, 10))
+            roll = rng.random()
+            v = None if roll < 0.05 else (float("nan") if roll < 0.1 else v)
+            text = None if rng.random() < 0.1 else f"doc-{k}-{h}".encode()
+            rows.append((f"u{k}", t0 + dt.timedelta(hours=int(h)), v, text))
+    df = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, v double, text binary"
+    ).repartition(3)
+
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        got = _blocks_by_key(
+            pack_blocks(df, "v", text_col="text", value_dtype="float64")
+        )
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+    src = df.select(
+        "url", "v", "text",
+        F.unix_micros("warc_ts").alias("ts_us"),
+        bucket_start(F.col("warc_ts"), "30d").alias("win"),
+    ).toPandas()
+    expected = {}
+    for (url, win), g in src.groupby(["url", "win"]):
+        g = g.sort_values("ts_us")
+        texts = g["text"].tolist()
+        lens = np.array([-1 if t is None else len(t) for t in texts], np.int64)
+        expected[(url, win.to_pydatetime())] = (
+            encode_timestamps(g["ts_us"].to_numpy(np.int64)),
+            encode_floats(g["v"].to_numpy(np.float64)),
+            zlib.compress(b"".join(t for t in texts if t is not None), 6),
+            lens.tobytes(),
+            len(g),
+        )
+    assert max(e[-1] for e in expected.values()) > 7  # groups span batches
+    assert got == expected
+
+
+def test_pack_blocks_null_key_raises(spark):
+    """A NULL key fails loudly instead of writing NULL into the
+    non-nullable block key."""
+    import datetime as dt
+
+    from pyspark.errors import PythonException
+
+    from mintpy_spark.codecs.blocks import pack_blocks
+
+    t0 = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [("u", t0, 1.0), (None, t0, 2.0)], "url string, warc_ts timestamp, v double"
+    )
+    with pytest.raises(PythonException, match="ValueError: map_sorted_groups: NULL key"):
+        pack_blocks(df, "v").collect()
+
+
+def test_pack_blocks_deterministic_under_duplicate_timestamps(spark):
+    """Rows sharing a timestamp within a block are ordered by value, then
+    text, so the blob bytes depend on the rows alone: two input orders
+    and partition counts give byte-identical blocks."""
+    import datetime as dt
+
+    from mintpy_spark.codecs.blocks import pack_blocks
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (f"u{k}", t0 + dt.timedelta(hours=h % 5), float(v), f"t{k}{h}{v}".encode())
+        for k in range(4)
+        for h in range(20)
+        for v in (3, 1, 2, 1)
+    ]
+    schema = "url string, warc_ts timestamp, v double, text binary"
+    a = spark.createDataFrame(rows, schema).coalesce(1)
+    b = spark.createDataFrame(rows[::-1], schema).repartition(5)
+    got_a = _blocks_by_key(pack_blocks(a, "v", text_col="text"))
+    got_b = _blocks_by_key(pack_blocks(b, "v", text_col="text"))
+    assert len(got_a) == 4
+    assert got_a == got_b

@@ -25,6 +25,7 @@ import glob
 import json
 import os
 import re
+import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -34,11 +35,28 @@ BEGIN = "# --- DRIVER_PRIORITY generated by tools/rebuild_priority.py ---"
 END = "# --- end generated DRIVER_PRIORITY ---"
 
 
+def correctness_files() -> list[str]:
+    """The committed CORRECTNESS_r*.json snapshots, sorted by round.
+
+    Only git-tracked files count: an untracked snapshot dropped into the
+    checkout (a round in progress) must not change the generated
+    priority, or the committed list goes stale the moment it lands.
+    Outside a git checkout every matching file counts."""
+    try:
+        out = subprocess.run(
+            ["git", "ls-files", "--", "CORRECTNESS_r*.json"],
+            cwd=REPO, capture_output=True, text=True, check=True,
+        ).stdout
+    except (OSError, subprocess.CalledProcessError):
+        return sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
+    return sorted(os.path.join(REPO, f) for f in out.split())
+
+
 def correctness_history() -> tuple[set[str], list[str]]:
     """Return (all keys ever driver-checked, keys red in their latest check)."""
     checked: set[str] = set()
     latest: dict[str, bool] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
+    for path in correctness_files():
         with open(path) as f:
             rec = json.load(f)
         for name, res in rec.items():
